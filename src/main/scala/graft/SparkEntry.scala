@@ -14,9 +14,12 @@ import graft.queries.{EtlQueries, ScaleQueries}
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** The fixture set [[entry]] reads; also `graft.Dev`'s default. */
+  val entrySfDir = "/root/testdata/sf0.001"
+
+  /** Flagship query on [[entrySfDir]]; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    EtlQueries.qJoinFx(spark, "/root/testdata/sf0.001")
+    EtlQueries.qJoinFx(spark, entrySfDir)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -60,8 +60,8 @@ object Graph {
     * Session confs are restored after `body`; the returned frame's lazy
     * tail (nation joins, orderBy) executes under session confs as before.
     */
-  private def withDimLoopConf[T](spark: SparkSession)(body: => T): T = {
-    val pins = Seq(
+  private def withDimLoopConf[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConf(spark,
       "spark.sql.shuffle.partitions" -> graft.streaming.Drain.PartitionFloor.toString,
       "spark.sql.adaptive.enabled" -> "false",
       // no auto-broadcast inside the loop: each auto-chosen broadcast of a
@@ -69,14 +69,7 @@ object Graph {
       // pure scheduling), and a fixed-round loop pays it per round — the
       // 4-partition shuffle joins pipeline all rounds inside ONE sealed
       // job instead (explicit broadcast() hints are unaffected)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** Iterative minimum-label propagation WITH pointer jumping: every node
     * starts labeled with its own id; each round every node takes the min

@@ -38,17 +38,13 @@ import graft.llm.Similarity
 object AnnServe {
 
   /** Stage the index + codebook and register the `ann` catalog tables;
-    * returns the catalog name. Same marker/registration discipline as
-    * q_dsv2_sql's `ensureFbSqlTable` (per-sfDir catalog name — Spark
-    * caches catalog instances by name, so a shared name would pin the
-    * first warehouse).
+    * returns the catalog name. Same marker discipline as q_dsv2_sql's
+    * `ensureFbSqlTable`, and the same per-sfDir catalog registration
+    * ([[graft.Session.fbInsightsCatalog]]).
     */
   private[graft] def ensureAnnTables(spark: SparkSession, sfDir: String): String = {
     val wh = Sink.scratchPath(sfDir, "ann_warehouse")
-    val cat = "annidx_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.FbInsightsCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val cat = graft.Session.fbInsightsCatalog(spark, "annidx", sfDir, wh)
     val marker = Paths.get(wh, "_GRAFT_DONE_ann_pq_v2")
     if (!Files.exists(marker)) {
       Files.createDirectories(Paths.get(wh))

@@ -416,20 +416,12 @@ object EtlQueries {
     * the batch load byte-for-byte (q_load_fb's oracle), proving the SQL
     * face and the DataFrame face hit the same write/read machinery.
     */
-  /** Register the per-sfDir catalog + marker-gated `db.fb_sql` table;
-    * returns the catalog name. Catalog name is per-sfDir: Spark's
-    * CatalogManager caches the catalog INSTANCE on first resolution, so
-    * re-pointing a shared `fbins.warehouse` conf for a second sfDir
-    * would silently keep the first warehouse (wrong-table reads behind
-    * a green marker). A distinct name per sfDir keys the cache
-    * correctly.
+  /** Register the per-sfDir catalog ([[graft.Session.fbInsightsCatalog]])
+    * + marker-gated `db.fb_sql` table; returns the catalog name.
     */
   private def ensureFbSqlTable(spark: SparkSession, sfDir: String): String = {
     val wh = Sink.scratchPath(sfDir, "fbins_warehouse")
-    val cat = "fbins_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.FbInsightsCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val cat = graft.Session.fbInsightsCatalog(spark, "fbins", sfDir, wh)
     val marker = java.nio.file.Paths.get(wh, "_GRAFT_DONE_fb_sql_v1")
     if (!java.nio.file.Files.exists(marker)) {
       Sink.dropUncommitted(s"$wh/db/fb_sql")

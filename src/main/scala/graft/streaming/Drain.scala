@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Session
 
 /** Shared drain-a-stream-into-parquet machinery for the synchronous
   * streaming queries (streamingDaily, streamingSessions, qStreamLoad):
@@ -11,23 +13,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Drain {
 
-  /** Low-level: run `stream` into `outDir` with `ckptDir`, synchronously.
-    *
-    * `shufflePartitions` sizes the stateful operators' state-store count
-    * for the stream's data volume (a micro-batch query pins its
-    * partition count at first start from the session conf): every
-    * stateful partition costs checkpointed store files PER MICRO-BATCH
-    * regardless of how little state it holds, so an oversized count is
-    * pure fixed overhead — measured here, a stream-stream join over the
-    * sf0.1 fixture spends most of its wall clock on 32-partition state
-    * churn that 8 partitions absorb, and dropping to 4 shaved a further
-    * ~17% off the streaming family's wall clock with bit-identical
-    * results (most of these drains key state on event_type — 5 keys —
-    * or a user hash whose fixture volume 4 stores absorb). On a real
-    * cluster the same knob scales UP with key cardinality and volume.
-    * The session conf is restored after the drain; batch queries in the
-    * session never see the override.
-    */
   /** Engine-reported drain accounting from StreamingQueryProgress.
     * NOTE `droppedByWatermark` counts only late rows that REACH a state
     * store; the derived watermark filter ahead of the stateful operator
@@ -37,17 +22,6 @@ object Drain {
     */
   case class DrainStats(inputRows: Long, droppedByWatermark: Long)
 
-  /** Returns [[DrainStats]] summed across the drained micro-batches
-    * (most callers ignore it; x_stream_late asserts on it).
-    */
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the prior value after. A micro-batch query snapshots the
-    * session conf at `start()`, so the custom `foreachBatch` drains use
-    * this exactly the way [[run]]'s override works for the file-sink
-    * drains: the Drain-measured 4 absorbs every per-batch shuffle at
-    * fixture volume, and the same knob scales UP with volume on a real
-    * cluster (see the [[run]] scaladoc for the measurement).
-    */
   /** ~128 MB of batch input per shuffle/state partition (guide §2.1's
     * partition-sizing target), floored at the Drain-measured fixture
     * minimum of 4 (see [[run]]'s scaladoc for that measurement).
@@ -96,48 +70,63 @@ object Drain {
     */
   val PartitionFloor = 4
 
-  /** [[withShufflePartitions]] plus, when the derived count sits at the
-    * fixture floor (batch ≤ ~512 MB), adaptive query execution disabled
-    * for the drain's per-batch bodies: AQE materializes EVERY exchange of
-    * every per-batch action as its own scheduled job so it can
-    * re-optimize between stages (measured on the curation funnel: ~23
-    * stage-jobs per micro-batch, 20–150 ms each — ~1.3 s/drain of pure
-    * scheduling), and below the floor there is nothing to re-optimize —
-    * no partitions to coalesce below the floor, no skew to split in
-    * single-digit-task stages. At production batch volumes (count above
-    * the floor) AQE stays ON — coalescing and skew handling earn their
-    * per-stage jobs there. Session confs are restored after `body`.
+  /** Run `body` — a custom `foreachBatch` drain — with
+    * `spark.sql.shuffle.partitions` pinned to `n`. A micro-batch query
+    * snapshots the session conf at `start()`, so this is the same
+    * override [[run]] applies for the file-sink drains.
+    *
+    * When `n` sits at the fixture floor (batch ≤ ~512 MB), adaptive query
+    * execution is also disabled for the drain's per-batch bodies: AQE
+    * materializes EVERY exchange of every per-batch action as its own
+    * scheduled job so it can re-optimize between stages (measured on the
+    * curation funnel: ~23 stage-jobs per micro-batch, 20–150 ms each —
+    * ~1.3 s/drain of pure scheduling), and below the floor there is
+    * nothing to re-optimize — no partitions to coalesce below the floor,
+    * no skew to split in single-digit-task stages. At production batch
+    * volumes (count above the floor) AQE stays ON — coalescing and skew
+    * handling earn their per-stage jobs there. Session confs are restored
+    * after `body`.
     */
-  def withBatchShuffle[T](spark: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val saved = spark.conf.getOption(aqeKey)
-    if (n <= PartitionFloor) spark.conf.set(aqeKey, "false")
-    try withShufflePartitions(spark, n)(body)
-    finally if (n <= PartitionFloor) saved match {
-      case Some(v) => spark.conf.set(aqeKey, v)
-      case None => spark.conf.unset(aqeKey)
-    }
+  def withBatchShuffle[T](spark: SparkSession, n: Int)(body: => T): T = {
+    val aqeOff =
+      if (n <= PartitionFloor) Seq("spark.sql.adaptive.enabled" -> "false") else Nil
+    Session.withConf(spark, ("spark.sql.shuffle.partitions" -> n.toString) +: aqeOff: _*)(body)
   }
 
-  def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
+  /** Low-level: run `stream` into `outDir` with `ckptDir`, synchronously,
+    * and return [[DrainStats]] summed across the drained micro-batches
+    * (most callers ignore it; x_stream_late asserts on it).
+    *
+    * `shufflePartitions` sizes the stateful operators' state-store count
+    * for the stream's data volume (a micro-batch query pins its
+    * partition count at first start from the session conf): every
+    * stateful partition costs checkpointed store files PER MICRO-BATCH
+    * regardless of how little state it holds, so an oversized count is
+    * pure fixed overhead — measured here, a stream-stream join over the
+    * sf0.1 fixture spends most of its wall clock on 32-partition state
+    * churn that 8 partitions absorb, and dropping to 4 shaved a further
+    * ~17% off the streaming family's wall clock with bit-identical
+    * results (most of these drains key state on event_type — 5 keys —
+    * or a user hash whose fixture volume 4 stores absorb). On a real
+    * cluster the same knob scales UP with key cardinality and volume.
+    * The session conf is restored after the drain; batch queries in the
+    * session never see the override.
+    */
   def run(stream: DataFrame, outDir: String, ckptDir: String,
           shufflePartitions: Option[Int] = None): DrainStats = {
     val spark = stream.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(key)
-    shufflePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
+    Session.withConf(spark,
+        shufflePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq: _*) {
+      // State-store provider: the default HDFS-backed one is kept on purpose.
+      // Measured over the six stateful streaming queries (sf0.1, local[32],
+      // idle box): hdfs-default 19.1 s total, RocksDB 21.9 s, RocksDB with
+      // changelog checkpointing 19.3 s — none within 5% of a win. At fixture
+      // scale every store holds a few KB, so the HDFS-backed provider's
+      // in-memory map and tiny snapshot files are near-free, while RocksDB
+      // pays a native open/flush/compact cycle per partition per micro-batch
+      // whatever the state size. RocksDB (+changelog) pays off only once
+      // per-partition state outgrows executor heap; that switch is one
+      // session conf (spark.sql.streaming.stateStore.providerClass), no code.
       val q = stream.writeStream
         .outputMode("append")
         .format("parquet")
@@ -160,11 +149,6 @@ object Drain {
           ps.map(_.numInputRows).sum,
           ps.flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum)
       } finally q.stop()
-    } finally if (shufflePartitions.isDefined) {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

@@ -14,12 +14,9 @@ import graft.llm.{Dedup, Multimodal, Similarity}
   */
 class GraftSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // 4 cores and 4 shuffle partitions: PLAN_MANIFEST.json's fingerprints
+  // are taken at this configuration
+  lazy val spark: SparkSession = Session.local(4)
 
   val sf = "/root/testdata/sf0.001"
 
@@ -99,16 +96,65 @@ class GraftSpec extends AnyFunSuite {
     assert(r.getAs[Double]("dp") === 11.0)
   }
 
-  test("extensions: session built withExtensions resolves graft functions") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    // getOrCreate may return the existing session; either way the function
-    // must resolve
-    graft.functions.GraftFunctions.register(s2)
-    assert(s2.sql("SELECT rolling_hash('x') AS h").head.getAs[Long]("h") === 'x'.toLong)
+  test("extensions: GraftExtensions injects functions, rule and strategy") {
+    import org.apache.spark.sql.graftx.ExtensionsBridge
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    assert(ExtensionsBridge.functionNames(ext).toSet ===
+      Set("rolling_hash", "minhash_sig", "simhash", "dot_product", "sq_dist"))
+    assert(ExtensionsBridge.optimizerRules(ext, spark).contains(graft.plans.TopKRewrite))
+    assert(ExtensionsBridge.plannerStrategies(ext, spark).contains(graft.plans.TopKStrategy))
+  }
+
+  // ---- Session.withConf -----------------------------------------------
+
+  test("Session.withConf: restores the prior value on exit and on a throw") {
+    val k = "spark.graft.spec.withconf"
+    spark.conf.set(k, "outer")
+    try {
+      assert(Session.withConf(spark, k -> "inner")(spark.conf.get(k)) === "inner")
+      assert(spark.conf.get(k) === "outer")
+      intercept[IllegalStateException] {
+        Session.withConf(spark, k -> "inner")(throw new IllegalStateException("body"))
+      }
+      assert(spark.conf.get(k) === "outer")
+    } finally spark.conf.unset(k)
+  }
+
+  test("Session.withConf: an unset key is unset again afterwards") {
+    // an unregistered key and a registered one with a default: neither
+    // may be left explicitly set
+    val keys = Seq("spark.graft.spec.unset", "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    def setKeys = keys.filter(spark.conf.getAll.contains)
+    assert(setKeys.isEmpty, "set before the scope")
+    Session.withConf(spark, keys.map(_ -> "1"): _*) {
+      keys.foreach(k => assert(spark.conf.get(k) === "1"))
+    }
+    assert(setKeys.isEmpty, "left set by the scope")
+  }
+
+  test("Session.withConf: a nested scope on the same key restores the outer value") {
+    val k = "spark.graft.spec.nested"
+    Session.withConf(spark, k -> "outer") {
+      Session.withConf(spark, k -> "inner", k -> "innermost") {
+        assert(spark.conf.get(k) === "innermost")
+      }
+      assert(spark.conf.get(k) === "outer")
+    }
+    assert(spark.conf.getOption(k).isEmpty)
+  }
+
+  test("Session.withConf: dim-loop and drain scopes restore session conf") {
+    // x_labelprop runs under Graph's dim-loop scope, x_stream_neardup
+    // under Drain.withBatchShuffle
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold")
+    def snapshot = keys.map(k => k -> (spark.conf.getAll.contains(k), spark.conf.getOption(k)))
+    val before = snapshot
+    Seq("x_labelprop", "x_stream_neardup").foreach { n =>
+      SparkEntry.queries(n)(spark, sf).count()
+      assert(snapshot === before, s"$n changed the session conf")
+    }
   }
 
   // ---- Dedup ----------------------------------------------------------
@@ -2913,6 +2959,21 @@ class GraftSpec extends AnyFunSuite {
     val exp = windowed.orderBy("date", "rn").collect().map(_.toSeq).toSeq
     val got = rewritten.orderBy("date", "rn").collect().map(_.toSeq).toSeq
     assert(got === exp)
+  }
+
+  test("TopKPerKey laws: k > group size keeps all rows; k=1 one per key") {
+    val d = queries.EtlQueries.fbStatTable(spark, sf)
+      .groupBy("date", "campaign_id").agg(sum("clicks").as("c")).cache()
+    try {
+      val order = Seq(("c", true), ("campaign_id", false))
+      val groupMax = d.groupBy("date").count().agg(max("count")).head.getLong(0)
+      // both laws are vacuous unless some group holds more than one row
+      assert(groupMax > 1 && groupMax < 1000, s"largest group $groupMax")
+      assert(plans.TopKPerKey(d, Seq("date"), order, 1000).count() === d.count())
+      val top1 = plans.TopKPerKey(d, Seq("date"), order, 1)
+      assert(top1.count() === d.select("date").distinct().count())
+      assert(top1.groupBy("date").count().filter(col("count") =!= 1).isEmpty)
+    } finally d.unpersist()
   }
 
   test("TopKRewrite rule: leaves non-matching filters untouched") {
