@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev command line, on the harness session ([[Session.fromEnv]]):
   *
-  *  - `run [query ...] [sfDir]` — with no names, the driver's
-  *    [[SparkEntry.entry]] smoke (rows > 0). For each named query, its
+  *  - `run [query ...] [sfDir]` — with no names, the
+  *    [[SparkEntry.entry]] smoke check (rows > 0). For each named query, its
   *    rows and the wall time of a first and a second call plus full
   *    materialization: the first pays staging and memo builds, the second
   *    is warm. `sfDir` defaults to [[SparkEntry.entrySfDir]].

@@ -17,7 +17,7 @@ object SparkEntry {
   /** The fixture set [[entry]] reads; also `graft.Dev`'s default. */
   val entrySfDir = "/root/testdata/sf0.001"
 
-  /** Flagship query on [[entrySfDir]]; driver smoke-checks rows>0. */
+  /** Flagship query on [[entrySfDir]]; its smoke check is rows > 0. */
   def entry(spark: SparkSession): DataFrame =
     EtlQueries.qJoinFx(spark, entrySfDir)
 
